@@ -254,7 +254,7 @@ final class Collection private (
     * read null; newer inserts take the same threshold externalization.
     */
   def addCollectionTextField(field: String, spec: TextFieldSpec): Unit =
-    stateLock.synchronized {
+    mutate {
       requirePriv("AlterCollection")
       require(field != schema.pkField && field != schema.tsField &&
         field != Collection.PartitionCol, s"cannot redefine system field '$field'")
@@ -267,7 +267,6 @@ final class Collection private (
       droppedFields -= field // re-add: the ts mask below prevents resurrection
       dynamicTextFields += field -> ((spec, ts))
       lastWriteTs = ts
-      invalidateFilterCache()
     }
 
   // ---- TEXT-LOB blob store (reference: storagev2 LobFileInfo +
@@ -332,7 +331,7 @@ final class Collection private (
     * WAL-append analogue — payload bytes land once); the data-side refs
     * re-derive from the same deterministic input.
     */
-  private def externalizeTextFields(batch: DataFrame): DataFrame =
+  private def externalizeTextFields(batch: DataFrame): DataFrame = mutate {
     if (textFieldSpecs.isEmpty) batch
     else textFieldSpecs.keysIterator
       .filter(batch.columns.contains)
@@ -345,6 +344,7 @@ final class Collection private (
           .getOrElse(pinned))
         data
       }
+  }
 
   /** AlterCollectionField (reference: alter_collection_field with
     * field_params={"warmup": ...}): set or change a field's warmup
@@ -429,7 +429,7 @@ final class Collection private (
     * switch that unloads `$meta`. A reload replaces the previous list.
     */
   def load(loadFields: Seq[String] = Nil,
-      skipLoadDynamicField: Boolean = false): Unit = stateLock.synchronized {
+      skipLoadDynamicField: Boolean = false): Unit = mutate {
     requirePriv("Load")
     if (loadFields.nonEmpty) {
       val fs = loadFields.toSet
@@ -457,7 +457,6 @@ final class Collection private (
       loadedFields = Some(fs)
     } else loadedFields = None
     skipDynamic = skipLoadDynamicField
-    invalidateFilterCache() // the load scope is part of view visibility
     sealedDf = sealedDf.map(
       _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the sealed blob store pins alongside the data (reference: load
@@ -487,9 +486,8 @@ final class Collection private (
     loadedFlag = true
   }
 
-  def release(): Unit = stateLock.synchronized {
+  def release(): Unit = mutate {
     requirePriv("Release")
-    invalidateFilterCache() // load scope change (see load())
     sealedDf.foreach(_.unpersist())
     lobSealed.foreach(_.unpersist()) // no-op when it was never pinned
     partialPin.foreach(_.unpersist())
@@ -534,7 +532,7 @@ final class Collection private (
     * absorbs the call as a no-op, matching the reference's
     * load-partition-after-load-collection tests.
     */
-  def loadPartitions(names: Seq[String]): Unit = stateLock.synchronized {
+  def loadPartitions(names: Seq[String]): Unit = mutate {
     requirePriv("Load")
     require(names.nonEmpty, "partition name list must be non-empty")
     val unknown = names.filterNot(partitionSet.contains)
@@ -544,7 +542,6 @@ final class Collection private (
       loadedPartitions = Some(set)
       repinPartial(set)
       loadedFlag = true
-      invalidateFilterCache() // load scope change (see load())
     }
   }
 
@@ -554,7 +551,7 @@ final class Collection private (
     * partial load of the remaining partitions; releasing the last
     * loaded partition leaves the collection NotLoad.
     */
-  def releasePartitions(names: Seq[String]): Unit = stateLock.synchronized {
+  def releasePartitions(names: Seq[String]): Unit = mutate {
     requirePriv("Release")
     require(names.nonEmpty, "partition name list must be non-empty")
     val unknown = names.filterNot(partitionSet.contains)
@@ -572,7 +569,6 @@ final class Collection private (
         loadedPartitions = Some(remaining)
         repinPartial(remaining)
       }
-      invalidateFilterCache() // load scope change (see load())
     }
   }
 
@@ -664,7 +660,7 @@ final class Collection private (
     * the partition's segments; MVCC tombstones are this engine's
     * release). The default partition cannot be dropped.
     */
-  def dropPartition(name: String): Long = stateLock.synchronized {
+  def dropPartition(name: String): Long = mutate {
     requirePriv("DropPartition")
     require(name != Collection.DefaultPartition, "cannot drop the default partition")
     require(partitionSet.contains(name), s"no such partition '$name'")
@@ -677,7 +673,6 @@ final class Collection private (
     logChange("delete", victims)
     partitionSet -= name
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -785,6 +780,26 @@ final class Collection private (
     * writes would otherwise lose a batch or observe torn state.
     */
   private[this] val stateLock = new Object
+
+  /** The one choke point for read-view state: every assignment to an
+    * input of [[readViewUnscoped]] / [[queryCached]] runs inside a
+    * `mutate` body. When the body ends (normally or not) both plan
+    * memos are dropped and [[stateVersion]] moves, so no memoized plan
+    * outlives the state it was built from. Reentrant: a nested call
+    * (insert's seal-policy flush, rekeyWrite's insert) just ends its own
+    * span early, which is harmless.
+    */
+  private def mutate[T](body: => T): T = stateLock.synchronized {
+    try body
+    finally {
+      filterMemo.clear()
+      viewMemo.clear()
+      stateVersion.incrementAndGet()
+    }
+  }
+
+  // bumped only by [[mutate]]; a memo entry is valid for exactly one value
+  private val stateVersion = new AtomicLong(0L)
 
   /** Session TSO (rootcoord's timestamp oracle stand-in). Seeded past
     * the sealed data's max ts on open — otherwise a delete at counter
@@ -917,7 +932,7 @@ final class Collection private (
     *   second pk column would break every later read.
     */
   private[graft] def insertImpl(rows: DataFrame,
-      preservePks: Boolean = false): Long = stateLock.synchronized {
+      preservePks: Boolean = false): Long = mutate {
     val ts = nextTs()
     // untagged rows land in the default partition; insertInto pre-tags;
     // a declared partition key routes each row to the hash bucket of
@@ -1016,7 +1031,6 @@ final class Collection private (
     // searchIndexed probe-prunes the tail instead of brute-forcing it
     assignInterim(withPk)
     lastWriteTs = ts
-    invalidateFilterCache()
     // seal-policy check (capacity / lifetime): rows are counted only
     // while a policy is installed, so the extra action is opt-in
     sealPolicy.foreach { p =>
@@ -1039,7 +1053,7 @@ final class Collection private (
     */
   def delete(filterExpr: String,
       params: Map[String, Any] = Map.empty,
-      namespace: Option[String] = None): Long = stateLock.synchronized {
+      namespace: Option[String] = None): Long = mutate {
     requirePriv("Delete")
     // task_delete.go:138 — deletes are namespace-checked and -scoped too
     val (delParts, delKeyNs) = namespaceScope(namespace, Nil)
@@ -1061,12 +1075,11 @@ final class Collection private (
     tombs = Some(tombs.map(_.unionByName(victims)).getOrElse(victims))
     logChange("delete", victims)
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
   def deletePks(pks: Seq[Any], namespace: Option[String] = None): Long =
-    stateLock.synchronized {
+    mutate {
       requirePriv("Delete")
       checkNamespace(namespace)
       val ts = nextTs()
@@ -1092,7 +1105,6 @@ final class Collection private (
       tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
       logChange("delete", t)
       lastWriteTs = ts
-      invalidateFilterCache()
       ts
     }
 
@@ -1124,7 +1136,7 @@ final class Collection private (
     * The tombstones make the superseded version — possibly in a
     * DIFFERENT bucket — invisible under any partition scope.
     */
-  private def rekeyWrite(stamped: DataFrame): Long = stateLock.synchronized {
+  private def rekeyWrite(stamped: DataFrame): Long = mutate {
     require(stamped.columns.contains(schema.pkField),
       s"upsert rows need the pk column ${schema.pkField}")
     val delTs = nextTs()
@@ -1133,7 +1145,6 @@ final class Collection private (
     val ts = insertImpl(stamped) // throws ⇒ neither half landed
     tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
     logChange("delete", t)
-    invalidateFilterCache()
     ts
   }
 
@@ -1236,7 +1247,7 @@ final class Collection private (
     * (it keeps applying merge-on-read until a batch materializes the
     * column).
     */
-  private def foldPatchesIntoLayout(path: String): Unit =
+  private def foldPatchesIntoLayout(path: String): Unit = mutate {
     if (colPatches.nonEmpty) {
       val preFold = sealedDf.getOrElse(
         throw new IllegalStateException("nothing to compact — empty collection"))
@@ -1256,15 +1267,12 @@ final class Collection private (
         else folded.write.parquet(foldPath)
         sealedDf = Some(readLayoutWritten(foldPath, folded.schema))
         sealedSegments = Vector(foldPath)
-        // the physical layout changed under an UNCHANGED lastWriteTs:
-        // cached view plans still read the superseded dirs, which a
-        // later retentionSweep may delete — drop them
-        invalidateFilterCache()
       }
       colPatches = deferred
     }
+  }
 
-  def compact(path: String): Unit = stateLock.synchronized {
+  def compact(path: String): Unit = mutate {
     requirePriv("Compaction")
     require(growing.isEmpty, "flush the growing tail before compacting")
     // root-lock the rewrite span (see flush): the sweep through another
@@ -1274,7 +1282,7 @@ final class Collection private (
     }
   }
 
-  private def compactLocked(path: String): Unit = {
+  private def compactLocked(path: String): Unit = mutate {
     // fold mutable-column patches first (20260709-mutable-columns.md:
     // compaction folds the patch overlay into the column files; vectors
     // and untouched columns stream through, row timestamps are kept)
@@ -1348,11 +1356,6 @@ final class Collection private (
         sealedDf = Some(readLayoutWritten(s"$runPath/data", merged.schema))
         sealedSegments = Vector(s"$runPath/data") // the single live segment
         tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
-        // layout supersession under an unchanged lastWriteTs (see
-        // foldPatchesIntoLayout): cached plans over the pre-compact
-        // dirs must not survive — a post-sweep re-run would read
-        // deleted files
-        invalidateFilterCache()
     }
   }
 
@@ -1376,7 +1379,7 @@ final class Collection private (
     *
     * Returns the number of orphaned payloads collected.
     */
-  def lobGc(path: String): Long = stateLock.synchronized {
+  def lobGc(path: String): Long = mutate {
     requirePriv("Compaction")
     // same root-lock span as retentionSweep: a returned gcPause
     // guarantees no in-flight reclamation on this root
@@ -1386,7 +1389,7 @@ final class Collection private (
     }
   }
 
-  private def lobGcLocked(path: String): Long = {
+  private def lobGcLocked(path: String): Long = mutate {
     lobStore match {
       case None => 0L
       case Some(store) =>
@@ -1438,10 +1441,6 @@ final class Collection private (
           if (lobResident) lobSealed = lobSealed.map(
             _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           lobGrowing = None // folded into the snapshot
-          // the LOB store moved to a fresh snap- dir under an unchanged
-          // lastWriteTs: cached view plans still join the superseded
-          // gen-/snap- dirs a later retentionSweep deletes — drop them
-          invalidateFilterCache()
           total - keptCount
         }
     }
@@ -1799,7 +1798,7 @@ final class Collection private (
       onPinned()
       val target = materializeRestore(st)
       stateLock.synchronized {
-        Collection.registerRestored(targetName, target, db)
+        Collection.register(targetName, target, db, checkReservation = false)
         completeRestoreJob(jobId, "RestoreSnapshotCompleted", 100, "")
       }
       jobId
@@ -2092,7 +2091,7 @@ final class Collection private (
     * below the horizon stop being visible and later inserts are
     * unaffected). Built indexes over pre-truncate data are dropped.
     */
-  def truncate(): Long = stateLock.synchronized {
+  def truncate(): Long = mutate {
     val ts = nextTs()
     // a full-range tombstone per existing pk would be O(rows); instead
     // cut the raw view at the horizon, which visible() honors because
@@ -2110,7 +2109,6 @@ final class Collection private (
     changeLog = None
     cdcApplied = None
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -2126,7 +2124,7 @@ final class Collection private (
     * of segment reads. Never overwrites a directory the current
     * sealedDf plan reads from, so repeated flushes to one path are safe.
     */
-  def flush(path: String): Unit = stateLock.synchronized {
+  def flush(path: String): Unit = mutate {
     requirePriv("Flush")
     // root-lock the write span: a retentionSweep through ANOTHER handle
     // of this root must not list this flush's half-written seg/gen dir
@@ -2137,7 +2135,7 @@ final class Collection private (
     }
   }
 
-  private def flushLocked(path: String): Unit = {
+  private def flushLocked(path: String): Unit = mutate {
     // seal the blob-store delta BEFORE the data segment (the reference
     // lands LOB files before sealing the segment that references them):
     // a crash between the two writes must leave unreferenced blobs (a
@@ -2645,7 +2643,7 @@ final class Collection private (
     * small segments' bytes; big segments never rewrite.
     */
   def forceMerge(path: String, targetSizeMb: Long,
-      maxSizeMb: Long = 1024L): Long = stateLock.synchronized {
+      maxSizeMb: Long = 1024L): Long = mutate {
     requirePriv("Compaction")
     require(targetSizeMb > 0, s"target_size must be positive, got $targetSizeMb")
     require(targetSizeMb >= maxSizeMb,
@@ -2690,9 +2688,6 @@ final class Collection private (
         case None => sealedDf = sealedDf.map(
           _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
-      // layout supersession under an unchanged lastWriteTs (see
-      // foldPatchesIntoLayout): drop cached plans over the pre-merge dirs
-      invalidateFilterCache()
     }
     val id = nextTs()
     compactionHistory +=
@@ -2804,7 +2799,7 @@ final class Collection private (
   // nanos for opened epoch-ns tables — the session's ts domain).
   @volatile private var collectionProperties: Map[String, String] = Map.empty
 
-  def alterCollection(props: Map[String, String]): Unit = stateLock.synchronized {
+  def alterCollection(props: Map[String, String]): Unit = mutate {
     requirePriv("AlterCollection")
     props.get("collection.ttl").foreach { v =>
       require(scala.util.Try(v.toLong).isSuccess,
@@ -2837,13 +2832,11 @@ final class Collection private (
           s"""invalid property key "$k", did you mean "${Collection.NamespaceModeKey}"?""")
     }
     collectionProperties ++= props
-    invalidateFilterCache() // a ttl property change alters visibility
   }
 
-  def dropCollectionProperties(keys: Seq[String]): Unit = stateLock.synchronized {
+  def dropCollectionProperties(keys: Seq[String]): Unit = mutate {
     requirePriv("AlterCollection")
     collectionProperties --= keys
-    invalidateFilterCache()
   }
 
   def describeCollectionProperties: Map[String, String] = {
@@ -3081,7 +3074,7 @@ final class Collection private (
     * partition tag, and the last vector field refuse to drop (the
     * proxy-side validations).
     */
-  def dropField(field: String): Long = stateLock.synchronized {
+  def dropField(field: String): Long = mutate {
     requirePriv("AlterCollection")
     require(field != schema.pkField, s"cannot drop the primary key field '$field'")
     require(field != schema.tsField, s"cannot drop the MVCC ts field '$field'")
@@ -3119,7 +3112,6 @@ final class Collection private (
     backfillFunctions = backfillFunctions.filterNot(_.outputField == field)
     functionsEverChanged = true
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3129,7 +3121,7 @@ final class Collection private (
     * add-field default fill and the no-resurrection guarantee after
     * [[dropField]] of the same name.
     */
-  def addCollectionField(field: String, default: Any): Long = stateLock.synchronized {
+  def addCollectionField(field: String, default: Any): Long = mutate {
     requirePriv("AlterCollection")
     require(field != schema.pkField && field != schema.tsField &&
       field != Collection.PartitionCol, s"cannot redefine system field '$field'")
@@ -3137,7 +3129,6 @@ final class Collection private (
     droppedFields -= field
     maskedFields += field -> ((ts, default))
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3208,7 +3199,7 @@ final class Collection private (
     */
   def addFunction(fn: graft.functions.IngestFunctions.FunctionSchema,
       backfill: Boolean = false): Unit =
-    stateLock.synchronized {
+    mutate {
       requirePriv("AlterCollection")
       require(!ingestFunctions.exists(_.outputField == fn.outputField),
         s"a function already produces '${fn.outputField}'")
@@ -3259,7 +3250,6 @@ final class Collection private (
       // carry two incompatible term vocabularies
       if (backfill) backfillFunctions :+= wired
       functionsEverChanged = true
-      invalidateFilterCache() // a backfill changes the read view in place
     }
 
   @volatile private var backfillFunctions
@@ -3276,14 +3266,13 @@ final class Collection private (
   /** DropCollectionFunction (by output field): stops computing; rows
     * already carrying the output keep it.
     */
-  def dropFunction(outputField: String): Unit = stateLock.synchronized {
+  def dropFunction(outputField: String): Unit = mutate {
     requirePriv("AlterCollection")
     require(ingestFunctions.exists(_.outputField == outputField),
       s"no collection function produces '$outputField'")
     ingestFunctions = ingestFunctions.filterNot(_.outputField == outputField)
     backfillFunctions = backfillFunctions.filterNot(_.outputField == outputField)
     functionsEverChanged = true // later batches lack the output column
-    invalidateFilterCache() // dropping a backfill changes the read view
   }
 
   def listFunctions: Seq[graft.functions.IngestFunctions.FunctionSchema] =
@@ -3323,7 +3312,7 @@ final class Collection private (
     * (the design's scope is scalars — vectors have indexes to keep
     * valid); pk / MVCC ts / partition tag are immutable.
     */
-  def setField(field: String, updates: DataFrame): Long = stateLock.synchronized {
+  def setField(field: String, updates: DataFrame): Long = mutate {
     requirePriv("Upsert")
     require(field != schema.pkField && field != schema.tsField &&
       field != Collection.PartitionCol, s"cannot patch system field '$field'")
@@ -3352,7 +3341,6 @@ final class Collection private (
       patch.select(col(schema.pkField), col("_patch_ts").as(schema.tsField),
         col(s"_patch_$field")))
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3419,54 +3407,30 @@ final class Collection private (
       preFilter: Option[Column] = None,
       ignoreGrowing: Boolean = false,
       pkDomain: Option[graft.operators.PkPruning.Domain] = None): DataFrame = {
-    // every state input not named in the key is covered by the
-    // invalidate-on-mutation contract (invalidateFilterCache callers).
-    // The build runs OUTSIDE stateLock — same read/write interleaving
-    // as the uncached path — and is only cached when no mutation
-    // intervened (epoch check), so a torn in-flight build can never
-    // poison the cache for later readers.
-    val epoch0 = viewCacheEpoch.get()
-    // a NONDETERMINISTIC ttl/preFilter (rand()-based sampling, uuid())
-    // must never be memoized: reusing its plan would freeze one draw's
-    // results as "the" view. The engine only passes deterministic
-    // scopes here (partition equality, ttl arithmetic), so the guard is
-    // belt-and-suspenders; it matches on the rendered expression (the
-    // Spark 4 Column API does not expose the expression tree publicly).
+    // the build runs OUTSIDE stateLock — same read/write interleaving as
+    // the uncached path — and is memoized only when no mutation
+    // intervened, so a torn in-flight build never poisons the memo
+    val version0 = stateVersion.get()
+    // a NONDETERMINISTIC ttl/preFilter (rand()-based sampling, uuid(),
+    // current_timestamp()) must never be memoized: reusing its plan
+    // would freeze one draw's results as "the" view. It matches on the
+    // rendered expression (the Spark 4 Column API does not expose the
+    // expression tree publicly).
     val cacheable = !(ttl.toSeq ++ preFilter.toSeq).exists { c =>
-      val s = c.toString
-      Collection.nondetFnPattern.matcher(s).find()
+      Collection.nondetFnPattern.matcher(c.toString).find()
     }
     if (!cacheable)
       return buildReadViewUnscoped(level, staleness, sessionTs, ttl,
         preFilter, ignoreGrowing, pkDomain)
-    val key = Seq(level.id, staleness, sessionTs, lastWriteTs,
+    val key = Seq(level.id, staleness, sessionTs,
       ttl.map(_.toString).getOrElse("-"),
       preFilter.map(_.toString).getOrElse("-"),
       ignoreGrowing, pkDomain.map(_.toString).getOrElse("-")).mkString("|")
-    val cached = stateLock.synchronized {
-      viewCache.get(key).map { case (df, hits) =>
-        viewCache.put(key, (df, hits + 1))
-        if (hits + 1 == viewPinThreshold) // battery pattern — pin it
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df
-      }
-    }
-    cached.getOrElse {
+    stateLock.synchronized(viewMemo.get(key)).getOrElse {
       val df = buildReadViewUnscoped(level, staleness, sessionTs, ttl,
         preFilter, ignoreGrowing, pkDomain)
       stateLock.synchronized {
-        if (viewCacheEpoch.get() == epoch0 && !viewCache.contains(key)) {
-          viewCache.put(key, (df, 1))
-          while (viewCache.size > viewCacheCapacity) { // FIFO eviction
-            val (k, (old, hits)) = viewCache.head
-            if (hits >= viewPinThreshold) old.unpersist()
-            viewCache.remove(k)
-            // capacity-eviction counter: a workload alternating more
-            // than viewCacheCapacity distinct views would thrash
-            // persist/unpersist invisibly — this makes it observable
-            viewEvictions += 1
-          }
-        }
+        if (stateVersion.get() == version0) viewMemo.put(key, df)
       }
       df
     }
@@ -3565,66 +3529,80 @@ final class Collection private (
     }
   }
 
-  // ---- compiled-filter result cache (reference: exec/expression/
-  // ExprCache.cpp — per-segment cache of filter result bitsets keyed by
-  // the expression, dropped when the segment's data changes). Spark
-  // shape: the cached artifact is the persisted FILTERED MVCC view (the
-  // bitset's moral equivalent — projections layer on top and share it).
-  // The key embeds the write-ts and the caller's RLS scope, so a write
-  // or a different principal can never see a stale or foreign result;
-  // writes also eagerly unpersist every entry (memory hygiene — the
-  // ts-in-key already guarantees correctness).
-  private val filterCache =
-    scala.collection.mutable.LinkedHashMap.empty[(String, Long, String), DataFrame]
-  private val filterCacheCapacity = 16
-  private var filterHits = 0L
-  private var filterMisses = 0L
-  private[graft] def filterCacheStats: (Long, Long) =
-    stateLock.synchronized((filterHits, filterMisses))
+  // ---- plan memos. Contract: every memo entry is valid for exactly one
+  // `stateVersion`; only [[mutate]] bumps it, and it drops both memos
+  // when it does — so no memoized plan outlives the state it was built
+  // from, and no mutator has to remember to invalidate.
+  //
+  // `filterMemo` (reference: exec/expression/ExprCache.cpp — per-segment
+  // filter result bitsets keyed by the expression, dropped when the
+  // segment's data changes): the persisted FILTERED view of
+  // [[queryCached]], keyed by the expression and the caller's RLS /
+  // load scope; projections layer on top and share it.
+  //
+  // `viewMemo`: [[readViewUnscoped]]'s plan, one analyzed Dataset per
+  // argument tuple, so repeated facade reads (queryAgg matrices, search
+  // between writes) skip re-building and re-analyzing the MVCC-collapse
+  // tree (guide §3.3: very large plans make planning the bottleneck).
+  // Its second read pins (persists) the view: the battery pattern pays
+  // one materialization and every later call scans memory, while a view
+  // read once is never persisted.
+  //
+  // FIFO-bounded; the `pinAfter`-th read persists an entry. Callers hold
+  // stateLock.
+  private final class PlanMemo[K](capacity: Int, pinAfter: Int) {
+    private val entries = scala.collection.mutable.LinkedHashMap.empty[K, (DataFrame, Int)]
+    var hits = 0L
+    var misses = 0L
+    // capacity evictions (NOT clears) — the thrash signal for a workload
+    // cycling through more than `capacity` distinct plans
+    var evictions = 0L
 
-  private def invalidateFilterCache(): Unit = {
-    filterCache.valuesIterator.foreach(_.unpersist())
-    filterCache.clear()
-    viewCache.valuesIterator.foreach { case (df, hits) =>
-      if (hits >= viewPinThreshold) df.unpersist()
+    private def pin(df: DataFrame): Unit =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    def get(key: K): Option[DataFrame] = {
+      val hit = entries.get(key).map { case (df, reads) =>
+        entries.put(key, (df, reads + 1))
+        if (reads + 1 == pinAfter) pin(df)
+        df
+      }
+      if (hit.isDefined) hits += 1 else misses += 1
+      hit
     }
-    viewCache.clear()
-    viewCacheEpoch.incrementAndGet()
+
+    def put(key: K, df: DataFrame): Unit = if (!entries.contains(key)) {
+      entries.put(key, (df, 1))
+      if (pinAfter == 1) pin(df)
+      while (entries.size > capacity) { // FIFO eviction
+        val (k, (old, reads)) = entries.head
+        if (reads >= pinAfter) old.unpersist()
+        entries.remove(k)
+        evictions += 1
+      }
+    }
+
+    def size: Int = entries.size
+
+    def clear(): Unit = {
+      entries.valuesIterator.foreach { case (df, reads) =>
+        if (reads >= pinAfter) df.unpersist()
+      }
+      entries.clear()
+    }
   }
 
-  // ---- read-view plan memo (driver-side): [[readViewUnscoped]]'s plan
-  // is a pure function of the collection's mutable state and its
-  // arguments, yet the facade batteries (queryAgg matrices, repeated
-  // query/search between writes) rebuilt — and Catalyst re-analyzed —
-  // the whole MVCC-collapse tree on EVERY call; at fixture scale that
-  // planning time dominates the work (guide §3.3: very large plans make
-  // planning itself the bottleneck — truncate / reuse). The memo reuses
-  // one analyzed Dataset per distinct argument tuple, and the SECOND
-  // read of the same view pins it (persist) so later calls in the
-  // battery scan an in-memory relation instead of re-collapsing — the
-  // same device as [[filterCache]], one level down, with the same
-  // lifetime: every mutation (and load/release scope change) clears it,
-  // so no result ever outlives the state it was computed from. A view
-  // read ONCE is never persisted (zero overhead on single-read paths).
-  private val viewCache =
-    scala.collection.mutable.LinkedHashMap.empty[String, (DataFrame, Int)]
-  private val viewCacheCapacity = 8
-  // Nth read of the same view pins it (persist). 2 = the battery
-  // pattern pays one materialization and every later call scans memory;
-  // raise (or set huge to disable pinning) via env for A/B measurement.
-  private val viewPinThreshold =
-    sys.env.get("SPARK_GRAFT_VIEWPIN").flatMap(_.toIntOption).getOrElse(2)
-  // lifetime count of capacity evictions (NOT invalidations) — the
-  // thrash signal for a facade surface outgrowing viewCacheCapacity
-  private var viewEvictions = 0L
-  private[graft] def viewCacheEvictions: Long =
-    stateLock.synchronized(viewEvictions)
-  // bumped on every invalidation: a view build that raced a mutation
-  // (started before, finished after) must not enter the cache
-  private val viewCacheEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val filterMemo = new PlanMemo[(String, String)](capacity = 16, pinAfter = 1)
+  private val viewMemo = new PlanMemo[String](capacity = 8, pinAfter = 2)
 
-  /** [[query]] through the filter-result cache: a repeated filter at an
-    * unchanged write-ts reuses the persisted filtered view instead of
+  private[graft] def filterCacheStats: (Long, Long) =
+    stateLock.synchronized((filterMemo.hits, filterMemo.misses))
+  private[graft] def viewCacheEvictions: Long =
+    stateLock.synchronized(viewMemo.evictions)
+  private[graft] def viewCacheSize: Int = stateLock.synchronized(viewMemo.size)
+
+  /** [[query]] through the filter-result cache: a repeated filter on an
+    * unchanged collection reuses the persisted filtered view instead of
     * re-scanning (the reference's repeated-filter fast path).
     */
   def queryCached(
@@ -3637,19 +3615,11 @@ final class Collection private (
       // baked under one loaded-partition set must not serve another
       val scope = rlsPolicies.mkString(";") + "|" + currentUser.toString +
         "|" + loadedPartitions.map(_.toSeq.sorted.mkString(",")).getOrElse("*")
-      val key = (filterExpr, lastWriteTs, scope)
-      filterCache.get(key) match {
-        case Some(df) => filterHits += 1; df
-        case None =>
-          filterMisses += 1
-          val df = readView().filter(compiled(filterExpr)).persist()
-          filterCache.put(key, df)
-          while (filterCache.size > filterCacheCapacity) { // FIFO eviction
-            val (k, old) = filterCache.head
-            old.unpersist()
-            filterCache.remove(k)
-          }
-          df
+      val key = (filterExpr, scope)
+      filterMemo.get(key).getOrElse {
+        val df = readView().filter(compiled(filterExpr))
+        filterMemo.put(key, df)
+        df
       }
     }
     val projected = base.select(outputFields.map(col): _*)
@@ -4314,10 +4284,9 @@ final class Collection private (
     * object itself stays usable (unloaded), matching DropCollection's
     * resource-release half.
     */
-  def close(): Unit = stateLock.synchronized {
+  def close(): Unit = mutate {
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
-    invalidateFilterCache()
     sealedDf.foreach(_.unpersist())
     loadedFlag = false
   }
@@ -4698,7 +4667,7 @@ final class Collection private (
     * with their original timestamps; the local TSO advances past the
     * feed's horizon so subsequent local writes stay ordered after it.
     */
-  def applyChanges(changes: DataFrame): Long = stateLock.synchronized {
+  def applyChanges(changes: DataFrame): Long = mutate {
     val pinned = changes.localCheckpoint(true)
     // local arrival tick: feed rows keep their ORIGIN timestamps (for
     // LWW convergence), so index-vs-tail splits need to know when they
@@ -4762,7 +4731,6 @@ final class Collection private (
     // buildTs ≥ this arrival so the late-CDC split above excludes rows
     // those builds already cover
     if (arrivalTs > lastWriteTs) lastWriteTs = arrivalTs
-    invalidateFilterCache()
     feedMax
   }
 
@@ -5164,10 +5132,13 @@ object Collection {
   private[graft] val restoreReservations =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
 
-  // nondeterministic scalar functions as they render in Column.toString
-  // — the view-memo's refuse-to-cache guard (readViewUnscoped)
+  // nondeterministic and clock-reading scalar functions as they render
+  // in Column.toString — the view-memo's refuse-to-cache guard
+  // (readViewUnscoped): a memoized `ts > current_timestamp() - x` scope
+  // would freeze the clock at the first read
   private[graft] val nondetFnPattern = java.util.regex.Pattern.compile(
-    "\\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id)\\(")
+    "\\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id|" +
+      "current_timestamp|current_date|now|unix_timestamp|localtimestamp)\\(")
 
   // fixed schemas of engine-written metadata files: supplying them at
   // read time skips the parquet footer-inference job (guide: remove
@@ -5531,7 +5502,16 @@ object Collection {
   /** Register a collection under a name (CreateCollection's naming half
     * — [[create]] stays anonymous for library-style use).
     */
-  def registerCollection(name: String, coll: Collection, db: String = "default"): Unit = {
+  def registerCollection(name: String, coll: Collection, db: String = "default"): Unit =
+    register(name, coll, db, checkReservation = true)
+
+  /** `checkReservation = false` is the restore completion path: the
+    * caller HOLDS the (db, name) reservation, which is what makes the
+    * name unavailable to everyone else — the check must not reject its
+    * own holder.
+    */
+  private def register(name: String, coll: Collection, db: String,
+      checkReservation: Boolean): Unit = {
     val colls = databases.get(db)
     if (colls == null) throw new NoSuchElementException(s"database '$db' does not exist")
     // cap check + insert under the db map's lock: two concurrent
@@ -5543,29 +5523,10 @@ object Collection {
           s"database '$db' is at its max.collections cap ($cap)"))
       // a name with an in-flight restore is taken: without this check a
       // plain create during the restore window would win the name and
-      // the restore would fail only AFTER materializing its corpus.
-      // The restore's own registration goes through registerRestored.
-      require(!restoreReservations.containsKey((db, name)),
+      // the restore would fail only AFTER materializing its corpus
+      require(!checkReservation || !restoreReservations.containsKey((db, name)),
         s"duplicate collection: '$db.$name' already exists " +
           "(a restore to this target is in progress)")
-      val prev = colls.putIfAbsent(name, coll)
-      require(prev == null, s"collection '$db.$name' already exists")
-    }
-  }
-
-  /** [[registerCollection]] for the restore completion path: the caller
-    * HOLDS the (db, name) reservation, which is what makes the name
-    * unavailable to everyone else — the reservation check must not
-    * reject its own holder.
-    */
-  private[graft] def registerRestored(name: String, coll: Collection,
-      db: String): Unit = {
-    val colls = databases.get(db)
-    if (colls == null) throw new NoSuchElementException(s"database '$db' does not exist")
-    colls.synchronized {
-      databaseProps.getOrDefault(db, Map.empty).get("database.max.collections")
-        .map(_.toLong).foreach(cap => require(colls.size < cap,
-          s"database '$db' is at its max.collections cap ($cap)"))
       val prev = colls.putIfAbsent(name, coll)
       require(prev == null, s"collection '$db.$name' already exists")
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.Metric
@@ -573,6 +574,48 @@ class CollectionSpec extends SparkSpec {
     // a delete recorded after the flush still masks the sealed row
     c.deletePks(Seq(5L))
     assert(c.count(ignoreGrowing = true) == 19)
+  }
+
+  test("no memoized view outlives a mutator (flush under ignore_growing, scope, functions, compact, lobGc)") {
+    import graft.functions.IngestFunctions.MinHashFunction
+    val c = Collection.create(spark, CollectionSchema(pkField = "pk",
+      vectorFields = Map("emb" -> 4), textFields = Map("txt" -> TextFieldSpec()),
+      textInlineThreshold = 4)) // every "doc N" payload lives in the blob store
+    c.createPartition("p1")
+    c.insert(mkRows(0L until 20L))
+    val dir = "/tmp/graft_test_igflush_" + System.nanoTime()
+    c.flush(dir)
+    c.insertInto("p1", mkRows(20L until 30L)) // growing tail
+    // the second read of the same view pins it
+    assert(c.count(ignoreGrowing = true) == 20)
+    assert(c.count(ignoreGrowing = true) == 20)
+    c.flush(dir) // seals the tail: the sealed-only view now holds 30 rows
+    assert(c.count(ignoreGrowing = true) == 30)
+    def sigRows = c.query("", Seq("pk", "sig")).count()
+    def sigCols = c.query("", Seq("*")).columns.count(_ == "sig").toLong
+    // (mutator, set-up before the pinned reads, mutation, read after, expected)
+    val steps = Seq[(String, () => Unit, () => Unit, () => Long, Long)](
+      ("loadPartitions", () => (), () => c.loadPartitions(Seq("p1")), () => c.count(), 10L),
+      ("load", () => (), () => c.load(), () => c.count(), 30L),
+      ("releasePartitions", () => (),
+        () => c.releasePartitions(Seq(Collection.DefaultPartition)), () => c.count(), 10L),
+      ("release", () => (), () => c.release(), () => c.count(), 30L),
+      ("compact", () => { c.deletePks(Seq(0L)); () },
+        () => { c.compact(dir); c.retentionSweep(dir, 0L); () }, () => c.count(), 29L),
+      ("lobGc", () => { c.deletePks(Seq(1L)); c.compact(dir) },
+        () => { assert(c.lobGc(dir) == 2L); c.retentionSweep(dir, 0L); () },
+        () => c.count(), 28L),
+      ("addFunction", () => (),
+        () => c.addFunction(MinHashFunction("txt", "sig", numHashes = 4), backfill = true),
+        () => sigRows, 28L),
+      ("dropFunction", () => (), () => c.dropFunction("sig"), () => sigCols, 0L))
+    steps.foreach { case (name, setUp, mutation, read, want) =>
+      setUp()
+      val before = c.count()
+      assert(c.count() == before) // pinned
+      mutation()
+      assert(read() == want, s"stale read after $name")
+    }
   }
 
   test("flushed partitions prune directories at the file source") {
@@ -2023,6 +2066,23 @@ class CollectionSpec extends SparkSpec {
     // correctness under eviction churn: every scope still counts right
     (1 to 10).foreach(i =>
       assert(c.partitionStatistics(s"vp$i")("row_count") == "1"))
+  }
+
+  test("nondeterministic and clock-reading view scopes are never memoized") {
+    val nondet = Collection.nondetFnPattern
+    def matches(c: Column) = nondet.matcher(c.toString).find()
+    Seq(rand(), uuid(), current_timestamp(), current_date(), expr("now()"),
+      unix_timestamp(), localtimestamp(),
+      col("_ts") > unix_timestamp(current_timestamp()) - lit(60))
+      .foreach(c => assert(matches(c), s"not flagged: $c"))
+    Seq(col("_ts") > lit(5L), col("nowhere") === 1, col("rand_score") + 1,
+      col("_partition") === "current_date", col("uuid_field").isNotNull)
+      .foreach(c => assert(!matches(c), s"falsely flagged: $c"))
+    // a current_timestamp()-based ttl: repeated reads never enter the memo
+    val c = fresh()
+    val ttl = Some(when(current_timestamp().isNotNull, lit(1000000L)))
+    (1 to 3).foreach(_ => assert(c.readView(ttl = ttl).count() == 50))
+    assert(c.viewCacheSize == 0 && c.viewCacheEvictions == 0L)
   }
 
   test("GraftSession.table memoizes the plan per (session, path)") {
